@@ -20,8 +20,14 @@ A pipeline is a named sequence of stages. Each stage:
 The checkpoint log itself is a SnapshotTable, so markers commit with
 the same atomic-rename protocol and are queryable as a DataFrame
 (per-partition metrics ARE rows, as the north rule requires, not log
-lines). ``resume_delta`` exposes the J6 anti-join: work items minus
-already-done items.
+lines). The bookkeeping stays off Spark: ``record`` writes each
+stage's few rows from the driver as one Arrow-built parquet file
+(``SnapshotTable.overwrite_partition`` with a ``pyarrow.Table``) whose
+footer carries ``CHECKPOINT_SCHEMA`` as its Spark row schema, and
+``done_stages`` reads the markers with pyarrow from the files the
+log's manifest lists — neither starts a Spark job, so a resume that
+skips every stage runs none. ``resume_delta`` exposes the J6
+anti-join: work items minus already-done items.
 """
 
 from __future__ import annotations
@@ -29,14 +35,32 @@ from __future__ import annotations
 import time
 from collections.abc import Callable
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DoubleType, LongType, StringType, StructField, StructType
 
-from gelos_spark.tables.snapshot import SnapshotTable
+from gelos_spark.tables.snapshot import SPARK_SCHEMA_KEY, SnapshotTable
 
-CHECKPOINT_SCHEMA = (
-    "run_id string, stage string, partition_id string, rows_in long, "
-    "rows_out long, bytes long, status string, wall_ms long, ts double"
+CHECKPOINT_SCHEMA = StructType(
+    [
+        StructField("run_id", StringType()),
+        StructField("stage", StringType()),
+        StructField("partition_id", StringType()),
+        StructField("rows_in", LongType()),
+        StructField("rows_out", LongType()),
+        StructField("bytes", LongType()),
+        StructField("status", StringType()),
+        StructField("wall_ms", LongType()),
+        StructField("ts", DoubleType()),
+    ]
+)
+# the Arrow form record() writes; its footer metadata makes Spark read
+# the file back as exactly CHECKPOINT_SCHEMA
+_ARROW_SCHEMA = to_arrow_schema(CHECKPOINT_SCHEMA).with_metadata(
+    {SPARK_SCHEMA_KEY: CHECKPOINT_SCHEMA.json()}
 )
 
 
@@ -51,23 +75,25 @@ class CheckpointLog:
         return self.table.read(self.spark)
 
     def done_stages(self, run_id: str) -> set[str]:
-        if self.table.is_empty():
-            return set()
-        rows = (
-            self.read()
-            .where((F.col("run_id") == run_id) & (F.col("status") == "done"))
-            .select("stage")
-            .distinct()
-            .collect()
-        )
-        return {r.stage for r in rows}
+        """Stages of ``run_id`` with a ``done`` marker, read with
+        pyarrow from the log files whose manifest run_id range holds
+        ``run_id`` (no Spark job)."""
+        done: set[str] = set()
+        for f in self.table.plan_files({"run_id": (run_id, run_id)}):
+            t = pq.read_table(f["path"], columns=["run_id", "stage", "status"]).to_pydict()
+            done.update(
+                stage
+                for rid, stage, status in zip(t["run_id"], t["stage"], t["status"])
+                if rid == run_id and status == "done"
+            )
+        return done
 
     def record(self, rows: list[tuple]) -> None:
-        df = self.spark.createDataFrame(rows, CHECKPOINT_SCHEMA)
+        table = pa.Table.from_arrays([list(c) for c in zip(*rows)], schema=_ARROW_SCHEMA)
         # one checkpoint commit per stage, tagged by (run, stage) so a
         # re-run replaces its own lineage instead of duplicating it
         run_id, stage = rows[0][0], rows[0][1]
-        self.table.overwrite_partition(df.coalesce(1), partition=f"{run_id}/{stage}")
+        self.table.overwrite_partition(table, partition=f"{run_id}/{stage}")
 
     def lineage(self, run_id: str) -> DataFrame:
         return self.read().where(F.col("run_id") == run_id).orderBy("stage", "partition_id")

@@ -112,12 +112,21 @@ def _image_pixels(i: int, w: int, h: int, seed: int) -> np.ndarray:
     return np.minimum(base.astype(np.int16) + grad[None, :, None], 255).astype(np.uint8)
 
 
+def _lulc_index(ids: np.ndarray, seed: int) -> np.ndarray:
+    """LULC index per uint64 id for the images table. The hash goes
+    through float64 before ``% 5``: that precision-lossy value is what
+    NumPy 1.x's promotion of a uint64 scalar with a Python int gave the
+    first generator, and every pinned caption carries it. The explicit
+    cast keeps it under NumPy 2's rules (NEP 50) too."""
+    return (_splitmix64(ids ^ np.uint64(seed + 17)).astype(np.float64) % 5).astype(np.int64)
+
+
 def image_row(i: int, w: int, h: int, seed: int) -> dict:
     """One fully-materialized images row (shared by generator + tests)."""
     fmt = codec.FORMATS[i % 3]
     px = _image_pixels(i, w, h, seed)
     lon, lat = tracker_coords(np.asarray([i]), seed)
-    lulc = LULC[int(_splitmix64(np.asarray([i], dtype=np.uint64) ^ np.uint64(seed + 17))[0] % 5)]
+    lulc = LULC[_lulc_index(np.asarray([i], dtype=np.uint64), seed)[0]]
     encoded = codec.encode(px, fmt)
     decoded = codec.decode(encoded, fmt, w, h)
     return {
@@ -150,13 +159,7 @@ def images_df(spark: SparkSession, n: int, w: int = 64, seed: int = 42, parts: i
                 continue
             u64 = ids.astype(np.uint64)
             lon, lat = tracker_coords(u64, seed)
-            # image_row's ``hash % 5`` mixes a uint64 SCALAR with a
-            # Python int, which NumPy promotes to float64 — reproduce
-            # that exact (precision-lossy) semantics batch-wise, or
-            # lulc diverges from the pinned per-row values
-            lulc_i = (
-                _splitmix64(u64 ^ np.uint64(seed + 17)).astype(np.float64) % 5
-            ).astype(np.int64)
+            lulc_i = _lulc_index(u64, seed)
             image_ids, blobs, fmts, captions, phashes = [], [], [], [], []
             for j, i in enumerate(ids):
                 i = int(i)

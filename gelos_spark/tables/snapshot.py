@@ -17,6 +17,13 @@ Iceberg semantics the north rule actually uses, from scratch:
   - **time travel**: every snapshot's manifest is retained;
     ``read_at(snapshot_id)`` reads any historical snapshot (the
     resume path reads lineage "as of" the last good snapshot).
+  - **schema from the manifest**: every entry also records the Spark
+    row schema its file's footer carries (the
+    ``org.apache.spark.sql.parquet.row.metadata`` key Spark writes), so
+    a read hands Spark the schema instead of re-inferring it from a
+    footer. When the picked files disagree (an append changed the
+    schema) or an entry has none (older manifests, footers without
+    the key) the read falls back to Spark's inference.
   - **scan planning from manifest column stats** (Iceberg's
     lower_bounds/upper_bounds): every commit records per-file min/max
     for primitive columns straight from the parquet footers (no data
@@ -53,7 +60,8 @@ Layout under ``root``:
   manifests/<snapshot_id>.json      {"snapshot_id", "parent", "ts",
                                      "files": [{"path", "rows",
                                      "bytes", "partition",
-                                     "stats": {col: [min, max]}}]}
+                                     "stats": {col: [min, max]},
+                                     "schema": spark-json | null}]}
   _current                          text file: latest snapshot_id
                                     (committed via atomic rename)
 
@@ -61,6 +69,10 @@ At cluster scale the same protocol works on any store with atomic
 rename (HDFS) or conditional put (S3); data-file writes are fully
 distributed (df.write.parquet) — only the tiny manifest commit and
 the footer-stat harvest are driver-side, exactly like Iceberg's.
+``overwrite_partition`` also takes a ``pyarrow.Table``: a handful of
+bookkeeping rows (the checkpoint log's) is written from the driver as
+one file (tmp file + rename) in a fresh commit directory and commits
+through the same manifest protocol, without starting a Spark job.
 
 Concurrency contract: ONE writer per table at a time (the engine's
 actual shapes — each pipeline stage owns its table, the streaming
@@ -80,12 +92,17 @@ import time
 import uuid
 from typing import Any
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 #: JSON-safe primitive python types a manifest stat may hold.
 _STAT_TYPES = (bool, int, float, str)
+
+#: parquet footer key under which Spark stores a file's row schema
+SPARK_SCHEMA_KEY = "org.apache.spark.sql.parquet.row.metadata"
 
 
 def _file_column_stats(meta: "pq.FileMetaData") -> dict[str, list]:
@@ -122,6 +139,34 @@ def _file_column_stats(meta: "pq.FileMetaData") -> dict[str, list]:
             continue  # NaN bounds can't order — skip, stay conservative
         stats[name] = [mn, mx]
     return stats
+
+
+def _file_entry(path: str, partition: str | None) -> dict:
+    """Manifest entry for one data file, from its footer alone. The
+    Spark schema JSON is stored in one canonical form so entries of
+    the same schema compare equal whichever writer produced them."""
+    meta = pq.read_metadata(path)
+    raw = (meta.metadata or {}).get(SPARK_SCHEMA_KEY.encode())
+    schema = json.dumps(json.loads(raw), sort_keys=True, separators=(",", ":")) if raw else None
+    return {
+        "path": path,
+        "rows": meta.num_rows,
+        "bytes": os.path.getsize(path),
+        "partition": partition,
+        "stats": _file_column_stats(meta),
+        "schema": schema,
+    }
+
+
+def _scan(spark: SparkSession, entries: list[dict]) -> DataFrame:
+    """Read the entries' files, with the schema their manifest entries
+    agree on, or with Spark's inference when they don't all carry the
+    same one."""
+    schemas = {f.get("schema") for f in entries}
+    reader = spark.read
+    if len(schemas) == 1 and None not in schemas:
+        reader = reader.schema(StructType.fromJson(json.loads(schemas.pop())))
+    return reader.parquet(*[f["path"] for f in entries])
 
 
 def _as_ranges(pred) -> list[tuple]:
@@ -235,9 +280,9 @@ class SnapshotTable:
         self.last_scan = {"files_total": len(all_files), "files_read": len(picked)}
         if not picked:
             # no file can match: empty frame with the table's schema
-            df = spark.read.parquet(all_files[0]["path"]).limit(0)
+            df = _scan(spark, all_files[:1]).limit(0)
         else:
-            df = spark.read.parquet(*[f["path"] for f in picked])
+            df = _scan(spark, picked)
         if not residual:
             return df
         for col, pred in (where or {}).items():
@@ -286,24 +331,13 @@ class SnapshotTable:
         commit_dir = os.path.join(self.root, "data", uuid.uuid4().hex)
         df.write.mode("overwrite").parquet(commit_dir)
         out: list[dict] = []
-        empties: list[str] = []
+        empties: list[dict] = []
         for name in sorted(os.listdir(commit_dir)):
             if not name.endswith(".parquet"):
                 continue
-            path = os.path.join(commit_dir, name)
-            meta = pq.ParquetFile(path).metadata
-            if meta.num_rows == 0:
-                empties.append(path)  # range partitions can be empty
-                continue
-            out.append(
-                {
-                    "path": path,
-                    "rows": meta.num_rows,
-                    "bytes": os.path.getsize(path),
-                    "partition": partition,
-                    "stats": _file_column_stats(meta),
-                }
-            )
+            entry = _file_entry(os.path.join(commit_dir, name), partition)
+            # range partitions can be empty
+            (out if entry["rows"] else empties).append(entry)
         if not out and empties and keep_empty_if_none:
             # a legitimately EMPTY commit (stage produced 0 rows) must
             # still register one schema-bearing file when the TABLE
@@ -311,19 +345,23 @@ class SnapshotTable:
             # schema and raises. Callers whose commit keeps other
             # files pass keep_empty_if_none=False so an idle stream's
             # empty batches don't accumulate 0-row files forever.
-            keep = empties.pop(0)
-            out.append(
-                {
-                    "path": keep,
-                    "rows": 0,
-                    "bytes": os.path.getsize(keep),
-                    "partition": partition,
-                    "stats": {},
-                }
-            )
-        for p in empties:
-            os.remove(p)
+            out.append(empties.pop(0))
+        for e in empties:
+            os.remove(e["path"])
         return out
+
+    def _write_arrow_file(self, table: pa.Table, partition: str | None) -> list[dict]:
+        """Write ``table`` from the driver as one data file of a fresh
+        commit directory: tmp file + rename, so the directory never
+        holds a torn ``.parquet`` (a crash leaves at most a tmp file
+        for expire_snapshots)."""
+        commit_dir = os.path.join(self.root, "data", uuid.uuid4().hex)
+        os.makedirs(commit_dir)
+        path = os.path.join(commit_dir, "part-00000.parquet")
+        tmp = f"{path}.tmp"
+        pq.write_table(table, tmp)
+        os.rename(tmp, path)
+        return [_file_entry(path, partition)]
 
     def _point_current(self, sid: int) -> None:
         """The atomic commit point, shared by _commit and rollback:
@@ -374,17 +412,22 @@ class SnapshotTable:
 
     def overwrite_partition(
         self,
-        df: DataFrame,
+        df: DataFrame | pa.Table,
         partition: str,
         cluster_by: list[str] | None = None,
         num_files: int | None = None,
     ) -> int:
         """Idempotent replace of every file tagged with ``partition``
-        (the resume path re-runs a stage safely)."""
+        (the resume path re-runs a stage safely). A ``pyarrow.Table``
+        is written from the driver as one file, with no Spark job;
+        ``cluster_by`` and ``num_files`` apply to DataFrames only."""
         kept = [f for f in self.files() if f["partition"] != partition]
-        new_files = self._write_data_files(
-            df, partition, cluster_by, num_files, keep_empty_if_none=not kept
-        )
+        if isinstance(df, pa.Table):
+            new_files = self._write_arrow_file(df, partition)
+        else:
+            new_files = self._write_data_files(
+                df, partition, cluster_by, num_files, keep_empty_if_none=not kept
+            )
         return self._commit(kept + new_files)
 
     def overwrite(
@@ -423,10 +466,10 @@ class SnapshotTable:
                 "(overwrite/compaction in the interval) — the delta is not "
                 "append-only; re-read the full snapshot"
             )
-        added = [f["path"] for f in new_entries if f["path"] not in old]
+        added = [f for f in new_entries if f["path"] not in old]
         if not added:
             return self.read(spark, to_snapshot).limit(0)
-        return spark.read.parquet(*added)
+        return _scan(spark, added)
 
     def rollback(self, snapshot_id: int) -> int:
         """Atomically point ``_current`` back at an earlier COMMITTED
@@ -490,7 +533,7 @@ class SnapshotTable:
                 # forever (convergence: compact() after compact() is a
                 # no-op)
                 continue
-            src = spark.read.parquet(*[f["path"] for f in fs])
+            src = _scan(spark, fs)
             new_files.extend(
                 self._write_data_files(src, part, cluster_by, num_files=int(n_out))
             )

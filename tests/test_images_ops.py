@@ -54,3 +54,19 @@ def test_perturb_changes_only_target_band_and_is_layout_invariant(spark):
         if not (po[:, :, 1] == pp[:, :, 1]).all():
             changed += 1
     assert changed >= 10  # perturbation actually does something
+
+
+# (id, seed) -> lulc, as every stored images table has it: the hash
+# goes through float64 before ``% 5`` (id 123, seed 42 is "trees" in
+# exact uint64 arithmetic)
+_PINNED_LULC = {(0, 42): "trees", (1, 42): "built", (123, 42): "water", (7, 11): "built", (999, 3): "trees"}
+
+
+def test_lulc_pinned_for_row_and_batch_paths(spark):
+    for (i, seed), lulc in _PINNED_LULC.items():
+        assert synth.image_row(i, 8, 8, seed)["caption"].split()[0] == lulc
+    for seed in {seed for _, seed in _PINNED_LULC}:
+        ids = [i for i, s in _PINNED_LULC if s == seed]
+        rows = synth.images_df(spark, max(ids) + 1, w=8, seed=seed, parts=2).collect()
+        got = {int(r.image_id[3:]): r.caption.split()[0] for r in rows}
+        assert {i: got[i] for i in ids} == {i: _PINNED_LULC[i, seed] for i in ids}

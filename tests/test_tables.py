@@ -13,7 +13,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from gelos_spark.plans.checkpoint import Pipeline, resume_delta
+from gelos_spark.plans.checkpoint import CheckpointLog, Pipeline, resume_delta
 from gelos_spark.tables.snapshot import SnapshotTable
 
 
@@ -569,3 +569,194 @@ def test_rollback_switches_current_and_preserves_history(spark, tmp_path):
     assert t.snapshots() == [s1, s3]
     with pytest.raises(ValueError, match="committed chain"):
         t.rollback(s2)
+
+
+# ------------- checkpoint bookkeeping off Spark, schema from manifest --
+
+# the log schema as the DDL the log was first declared with
+_CHECKPOINT_DDL = (
+    "run_id string, stage string, partition_id string, rows_in long, "
+    "rows_out long, bytes long, status string, wall_ms long, ts double"
+)
+
+
+def _job_ids(spark, group):
+    return list(spark.sparkContext.statusTracker().getJobIdsForGroup(group))
+
+
+def _in_job_group(spark, group, fn):
+    """``fn`` with every Spark job it starts charged to ``group``."""
+    sc = spark.sparkContext
+
+    def run(*a, **k):
+        sc.setJobGroup(group, group)
+        try:
+            return fn(*a, **k)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+
+    return run
+
+
+def test_checkpoint_bookkeeping_starts_no_spark_job(spark, tmp_path, monkeypatch):
+    """Lineage commits and resume checks are driver-side: ``record``
+    and ``done_stages`` start no Spark job, and a resume that skips
+    every stage starts none at all."""
+    root = str(tmp_path / "run")
+    probe = f"probe-{tmp_path.name}"
+    _in_job_group(spark, probe, lambda: spark.range(3).count())()
+    assert _job_ids(spark, probe)  # the group does see jobs
+
+    group = f"bookkeeping-{tmp_path.name}"
+    for name in ("record", "done_stages"):
+        monkeypatch.setattr(
+            CheckpointLog, name, _in_job_group(spark, group, getattr(CheckpointLog, name))
+        )
+
+    def stages(p):
+        p.stage("s1", lambda sp: sp.range(0, 40).withColumn("v", F.col("id") % 3))
+        return p.stage("s2", lambda sp: p.output("s1").groupBy("v").count())
+
+    fresh = Pipeline(spark, root, "r1")
+    stages(fresh)
+    assert fresh.executed == ["s1", "s2"]
+    assert fresh.log.done_stages("r1") == {"s1", "s2"}
+    assert _job_ids(spark, group) == []
+
+    def resume_run():
+        p = Pipeline(spark, root, "r1")
+        stages(p)
+        return p
+
+    resume = f"resume-{tmp_path.name}"
+    again = _in_job_group(spark, resume, resume_run)()
+    assert again.skipped == ["s1", "s2"] and again.executed == []
+    assert _job_ids(spark, resume) == []
+    assert sorted(tuple(r) for r in again.output("s2").collect()) == [(0, 14), (1, 13), (2, 13)]
+
+
+def test_checkpoint_log_schema_round_trip(spark, tmp_path):
+    """The Arrow-written log reads back with exactly the types of the
+    original DDL, whether empty or written, through the manifest or
+    through plain Spark inference over its files."""
+    want = spark.createDataFrame([], _CHECKPOINT_DDL).schema
+    log = CheckpointLog(spark, str(tmp_path / "log"))
+    assert log.read().schema == want
+    row = ("r1", "s1", "__stage__", -1, 5, -1, "done", 12, 1.5)
+    log.record([row])
+    assert log.read().schema == want
+    assert [tuple(r) for r in log.read().collect()] == [row]
+    assert spark.read.parquet(*[f["path"] for f in log.table.files()]).schema == want
+
+
+def test_read_takes_schema_from_manifest(spark, tmp_path, monkeypatch):
+    """Reads hand Spark the schema the manifest recorded from the
+    footers, which is the schema Spark's inference gives, for nested,
+    timestamp and all-null columns; an append that changes the schema
+    (or an entry without one) falls back to inference."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    given = []
+    real_schema = DataFrameReader.schema
+
+    def spy(self, schema):
+        given.append(schema)
+        return real_schema(self, schema)
+
+    monkeypatch.setattr(DataFrameReader, "schema", spy)
+
+    df = spark.range(0, 6).select(
+        "id",
+        F.array(F.col("id"), F.col("id") + 1).alias("arr"),
+        F.struct(F.col("id").alias("a"), F.col("id").cast("string").alias("b")).alias("st"),
+        F.timestamp_seconds(F.col("id")).alias("ts"),
+        F.lit(None).cast("string").alias("nothing"),
+    )
+    t = SnapshotTable(str(tmp_path / "t"))
+    t.append(df.coalesce(1))
+    t.append(df.repartition(2))
+    assert all(f["schema"] for f in t.files())
+    paths = [f["path"] for f in t.files()]
+    got = t.read(spark)
+    assert len(given) == 1
+    assert got.schema == spark.read.parquet(*paths).schema
+    assert sorted(map(tuple, got.collect())) == sorted(
+        map(tuple, spark.read.parquet(*paths).collect())
+    )
+
+    changed = SnapshotTable(str(tmp_path / "changed"))
+    changed.append(spark.range(0, 4).coalesce(1))
+    changed.append(spark.range(4, 8).withColumn("extra", F.lit("x")).coalesce(1))
+    paths = [f["path"] for f in changed.files()]
+    given.clear()
+    out = changed.read(spark)
+    assert given == []
+    assert out.schema == spark.read.parquet(*paths).schema
+    assert out.count() == 8
+
+    # a manifest written before entries carried a schema reads as before
+    import json as _json
+
+    mpath = os.path.join(t.root, "manifests", f"{t.current_snapshot_id()}.json")
+    man = _json.load(open(mpath))
+    man["files"][0].pop("schema")
+    _json.dump(man, open(mpath, "w"))
+    out = t.read(spark)
+    assert given == []
+    assert out.schema == got.schema and out.count() == 12
+
+
+def test_lineage_commit_crash_keeps_resume_state(spark, tmp_path, monkeypatch):
+    """A crash between writing a stage's lineage file and committing
+    it leaves the log's done markers as they were; the re-run executes
+    the stage once more and its lineage is recorded once, not twice;
+    expire_snapshots deletes the crashed attempt's file."""
+    root = str(tmp_path / "run")
+    s1 = lambda sp: sp.range(0, 20)  # noqa: E731
+    s2 = lambda sp: sp.range(0, 30).repartition(3)  # noqa: E731
+    p1 = Pipeline(spark, root, "r1")
+    p1.stage("s1", s1)
+    log = p1.log
+    committed = {f["path"] for f in log.table.files()}
+
+    real_commit = SnapshotTable._commit
+
+    def dying(self, files):
+        if self.root == log.table.root:
+            raise RuntimeError("killed before the lineage commit")
+        return real_commit(self, files)
+
+    monkeypatch.setattr(SnapshotTable, "_commit", dying)
+    p2 = Pipeline(spark, root, "r1")
+    p2.stage("s1", s1)
+    with pytest.raises(RuntimeError, match="lineage commit"):
+        p2.stage("s2", s2)
+    monkeypatch.undo()
+
+    assert log.done_stages("r1") == {"s1"}
+    assert {f["path"] for f in log.table.files()} == committed
+    on_disk = {
+        os.path.join(d, n)
+        for d, _, names in os.walk(os.path.join(log.table.root, "data"))
+        for n in names
+        if n.endswith(".parquet")
+    }
+    (orphan,) = on_disk - committed  # written, never committed
+
+    p3 = Pipeline(spark, root, "r1")
+    p3.stage("s1", s1)
+    p3.stage("s2", s2)
+    assert p3.skipped == ["s1"] and p3.executed == ["s2"]
+    assert log.done_stages("r1") == {"s1", "s2"}
+    assert p3.table("s2").total_rows() == 30
+    rows = log.lineage("r1").collect()
+    for stage, n in (("s1", 20), ("s2", 30)):
+        mine = [r for r in rows if r.stage == stage]
+        assert [r.rows_out for r in mine if r.status == "done"] == [n]
+        assert sum(r.rows_out for r in mine if r.status == "file") == n
+
+    log.table.expire_snapshots(keep_last=1)
+    assert not os.path.exists(orphan)
+    assert log.done_stages("r1") == {"s1", "s2"}
+    assert log.read().count() == len(rows)
